@@ -15,9 +15,12 @@ from functools import lru_cache
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from grafeo_spark.graph import PropertyGraph, TripleStore
 from grafeo_spark.plans.compiler import Compiler
+
+_ID = StructType([StructField("id", LongType(), True)])
 
 
 @lru_cache(maxsize=256)
@@ -185,36 +188,31 @@ class GrafeoSpark:
 
         return _run(self.triples, query)
 
-    # un-checkpointed update layers tolerated before the store's lineage is
-    # truncated: compile_update guarantees each layer references the prior
-    # store exactly once (deltas are materialized eagerly), so plan depth —
-    # and the per-layer re-analysis cost — grows linearly, not 2^k; the
-    # periodic checkpoint only bounds that linear depth for long sessions.
+    # store re-bases (updates whose result is not the old base plus one
+    # write delta — CLEAR, COPY/MOVE/ADD GRAPH) tolerated before the
+    # store's lineage is folded into a flat leaf (lazy checkpoint)
     _UPDATE_CHECKPOINT_EVERY = 8
 
     def sparql_update(self, query: str) -> None:
         """Apply a SPARQL update (INSERT/DELETE DATA, DELETE WHERE,
         DELETE/INSERT WHERE, CLEAR/COPY/MOVE/ADD/... GRAPH) to the attached
         TripleStore, replacing it with the updated store (immutable-store
-        semantics, like the Cypher write path). compile_update materializes
-        only the delta frames (delete/insert sets — tiny), so an update
-        costs one or two store scans instead of the full-store
-        re-materialization the per-update checkpoint used to pay; the store
-        itself flows through the stacked anti-join/union layers once, at
-        the next query's action. Every _UPDATE_CHECKPOINT_EVERY updates the
-        accumulated layers are folded into a flat leaf (lazy checkpoint) to
-        bound plan depth in long update streams."""
+        semantics, like the Cypher write path). Inserted and deleted
+        triples merge into the store's one write delta (TripleStore), so
+        data updates leave the store's plan the same size; every
+        _UPDATE_CHECKPOINT_EVERY re-basing updates the accumulated layers
+        are folded into a flat leaf to bound plan depth."""
         if self.triples is None:
             raise ValueError("no triple store attached")
-        from grafeo_spark.graph import TripleStore
         from grafeo_spark.lang.sparql import sparql_update as _run
 
-        new_df = _run(self.triples, query).df
-        self._update_layers = getattr(self, "_update_layers", 0) + 1
-        if self._update_layers >= self._UPDATE_CHECKPOINT_EVERY:
-            new_df = new_df.localCheckpoint(eager=False)
-            self._update_layers = 0
-        self.triples = TripleStore(new_df)
+        new = _run(self.triples, query)
+        if new.base is not self.triples.base:
+            self._update_layers = getattr(self, "_update_layers", 0) + 1
+            if self._update_layers >= self._UPDATE_CHECKPOINT_EVERY:
+                new = TripleStore(new.df.localCheckpoint(eager=False))
+                self._update_layers = 0
+        self.triples = new
 
     # -- direct store API (database.rs:618-931 'side door') ---------------
 
@@ -499,6 +497,7 @@ class GrafeoSpark:
                 lbl,
                 self._with_prop(self.graph.node_frames[lbl], node_id, key, col),
                 ids_disjoint=True,
+                same_ids=True,
             )
 
     def remove_node_property(self, node_id, key: str) -> bool:
@@ -520,7 +519,10 @@ class GrafeoSpark:
             if cur.count() > 0:
                 had = True
             self.graph = self.graph.with_nodes(
-                lbl, self._with_prop(f, node_id, key, F.lit(None)), ids_disjoint=True
+                lbl,
+                self._with_prop(f, node_id, key, F.lit(None)),
+                ids_disjoint=True,
+                same_ids=True,
             )
         return had
 
@@ -590,11 +592,10 @@ class GrafeoSpark:
         f = self.graph.node_frames[label]
         if f.filter(F.col("id") == F.lit(node_id)).limit(1).count() == 0:
             return False
-        self.graph = self.graph.with_nodes(
-            label,
-            f.filter(F.col("id") != F.lit(node_id)).localCheckpoint(eager=False),
-            ids_disjoint=True,
-        )
+        from grafeo_spark.graph import Rows
+
+        ids = Rows(_ID, [(node_id,)])
+        self.graph = self.graph.delete_nodes(label, ids, detach=False)
         return True
 
     def get_node_labels(self, node_id) -> list[str] | None:
@@ -606,46 +607,55 @@ class GrafeoSpark:
     def create_node(self, labels, properties: dict | None = None):
         """Create one node with the given label(s) and properties; returns
         a Row with the assigned ``id`` (create_node binding,
-        database.rs:618 family). The id comes from the shared max+1
-        allocator the query-language mutation paths use."""
+        database.rs:618 family). The id comes from the graph's carried id
+        mark, shared with the query-language mutation paths; the row is a
+        JVM local relation, so the create runs no Spark job."""
         from pyspark.sql import Row
+        from pyspark.sql import functions as F
+
+        from grafeo_spark.graph import Rows
 
         if isinstance(labels, str):
             labels = [labels]
-        nid = self.graph.next_node_id()
-        from pyspark.sql import functions as F
-
-        base = self.spark.range(1).select(F.lit(nid).cast("long").alias("id"))
-        for k, v in (properties or {}).items():
-            base = base.withColumn(k, self._value_column(v))
-        base = base.localCheckpoint(eager=True)
-        for lbl in labels:
-            self.graph = self.graph.create_nodes(
-                lbl, base, ids_disjoint=(len(labels) == 1)
+        g = self.graph
+        nid = g.next_node_id()
+        props = properties or {}
+        rows = Rows.of_dicts([{"id": nid, **props}])
+        if rows is None:
+            # dict / mixed-list values: typed struct and array columns
+            rows = self.spark.range(1).select(
+                F.lit(nid).cast("long").alias("id"),
+                *[self._value_column(v).alias(k) for k, v in props.items()],
             )
+        for lbl in labels:
+            g = g.create_nodes(lbl, rows, ids_disjoint=(len(labels) == 1), next_id=nid + 1)
+        self.graph = g
         return Row(id=nid, labels=tuple(labels))
 
     def create_edge(self, src_id, dst_id, etype: str, properties: dict | None = None):
         """Create one edge; returns a Row with the assigned ``id``
-        (create_edge binding). Edge ids share one max+1 pool across typed
-        frames that carry an ``id`` column."""
+        (create_edge binding). Edge ids come from the graph's carried
+        edge-id mark over the typed frames that carry an ``id`` column."""
         from pyspark.sql import Row
         from pyspark.sql import functions as F
 
-        mx = 0
-        for f in self.graph.edge_frames.values():
-            if "id" in f.columns:
-                m = f.agg(F.max("id")).first()[0]
-                mx = max(mx, m if m is not None else 0)
-        eid = mx + 100  # clear of loader-assigned ranges
-        base = self.spark.range(1).select(
-            F.lit(eid).cast("long").alias("id"),
-            F.lit(src_id).cast("long").alias("src"),
-            F.lit(dst_id).cast("long").alias("dst"),
+        from grafeo_spark.graph import Rows
+
+        eid = self.graph.next_edge_id()
+        props = properties or {}
+        like = self.graph.edge_frames.get(etype)
+        rows = Rows.of_dicts(
+            [{"id": eid, "src": src_id, "dst": dst_id, **props}],
+            like.schema if like is not None else None,
         )
-        for k, v in (properties or {}).items():
-            base = base.withColumn(k, self._value_column(v))
-        self.graph = self.graph.create_edges(etype, base.localCheckpoint(eager=True))
+        if rows is None:
+            rows = self.spark.range(1).select(
+                F.lit(eid).cast("long").alias("id"),
+                F.lit(src_id).cast("long").alias("src"),
+                F.lit(dst_id).cast("long").alias("dst"),
+                *[self._value_column(v).alias(k) for k, v in props.items()],
+            )
+        self.graph = self.graph.create_edges(etype, rows, next_edge_id=eid + 1)
         return Row(id=eid, src=src_id, dst=dst_id, edge_type=etype)
 
     def delete_node(self, node_id) -> bool:
@@ -654,9 +664,9 @@ class GrafeoSpark:
         labels = self._node_labels_of(node_id)
         if not labels:
             return False
-        from grafeo_spark.graph import local_frame
+        from grafeo_spark.graph import Rows
 
-        ids = local_frame(self.spark, [(node_id,)], "id long")
+        ids = Rows(_ID, [(node_id,)])
         for lbl in labels:
             self.graph = self.graph.delete_nodes(lbl, ids, detach=True)
         return True
@@ -738,13 +748,16 @@ class GrafeoSpark:
         shape, not a per-vector loop."""
         if not vectors:
             return []
+        from grafeo_spark.graph import DELTA_ROWS, Rows
+
         base = self.graph.next_node_id()
         ids = list(range(base, base + len(vectors)))
-        df = self.spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in zip(ids, vectors)],
-            f"id long, {column} array<double>",
-        ).localCheckpoint(eager=True)
-        self.graph = self.graph.create_nodes(label, df, ids_disjoint=True)
+        schema = StructType(
+            [StructField("id", LongType(), True), StructField(column, ArrayType(DoubleType()), True)]
+        )
+        data = [(i, [float(x) for x in v]) for i, v in zip(ids, vectors)]
+        rows = Rows(schema, data) if len(data) <= DELTA_ROWS else self.spark.createDataFrame(data, schema)
+        self.graph = self.graph.create_nodes(label, rows, ids_disjoint=True, next_id=ids[-1] + 1)
         return ids
 
     def get_nodes_by_label(self, label: str, limit: int | None = None, offset: int = 0):
@@ -1213,16 +1226,7 @@ class Transaction:
         # statement and create_property_index) are not. Copy both so DDL
         # inside the transaction stays invisible until commit and truly
         # disappears on rollback.
-        work_graph = db.graph
-        if work_graph is not None:
-            work_graph = PropertyGraph(
-                work_graph.node_frames,
-                work_graph.edge_frames,
-                endpoints=work_graph.endpoints,
-                disjoint_labels=work_graph.disjoint_labels,
-                distinct_pairs=work_graph.distinct_pairs,
-                edge_keys=work_graph.edge_keys,
-            )
+        work_graph = db.graph.copy() if db.graph is not None else None
         self._work = GrafeoSpark(db.spark, work_graph, db.triples)
         if db.ddl is not None:
             import copy

@@ -10,11 +10,20 @@ append / anti-join / column-rewrite transformations of the graph's
 node/edge frames — snapshot-in, snapshot-out (reads inside one statement
 see the pre-write state, like a single Cypher transaction).
 
+Writes land in each written frame's one delta (graph.py): created rows in
+its inserted rows, SET/REMOVE in its per-id patch, DELETE in its deleted-key
+set, so a frame keeps one plan shape however many writes it takes. A
+statement with no read part (CREATE/MERGE with literal or ``$param``
+properties) binds one literal row and builds its rows in Python as a JVM
+local relation: CREATE runs no Spark job, MERGE only its existence probe.
+
 Batch semantics notes (documented divergences, SURVEY.md §7):
 - SET with multiple matches per entity resolves deterministically by MAX;
 - edge identity for DELETE on an edge variable is its (src, dst) pair
   within its type frame (parallel edges share fate);
-- new node ids are allocated sequentially above the current max id.
+- new node ids come from the graph's carried id high-water mark
+  (``PropertyGraph.next_node_id``): sequential, never reused, and free to
+  allocate once the mark is known.
 """
 
 from __future__ import annotations
@@ -23,7 +32,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from grafeo_spark.graph import Rows, literal_row, set_flag, values_frame
 from grafeo_spark.lang.cypher import parser as P
 from grafeo_spark.lang.cypher import translator as T
 from grafeo_spark.plans import exprs as E
@@ -73,9 +84,7 @@ def execute(db, uq: P.UnionQuery, params: dict[str, Any]) -> DataFrame:
     db.graph = mx.graph
     if result is not None:
         return result
-    from grafeo_spark.graph import local_frame
-
-    return local_frame(
+    return values_frame(
         db.spark,
         [
             (
@@ -88,10 +97,25 @@ def execute(db, uq: P.UnionQuery, params: dict[str, Any]) -> DataFrame:
                 mx.stats["labels_removed"],
             )
         ],
-        "nodes_created long, relationships_created long, nodes_deleted long, "
-        "relationships_deleted long, properties_set long, labels_added long, "
-        "labels_removed long",
+        _SUMMARY,
     )
+
+
+_SUMMARY = StructType(
+    [
+        StructField(k, LongType(), True)
+        for k in (
+            "nodes_created",
+            "relationships_created",
+            "nodes_deleted",
+            "relationships_deleted",
+            "properties_set",
+            "labels_added",
+            "labels_removed",
+        )
+    ]
+)
+_ID = StructType([StructField("id", LongType(), True)])
 
 
 class _Mutator:
@@ -103,6 +127,11 @@ class _Mutator:
         self.ctx = T._Ctx()
         self._df: DataFrame | None = None  # compiled binding frame
         self._scope: dict = {}
+        # While the statement has no read part its binding frame is ONE
+        # literal row, and this maps each node variable bound so far to its
+        # id; writes then build their rows in Python (no Spark job). None
+        # once the bindings come from a read or a multi-row write.
+        self._lit: dict[str, int] | None = None
         self.stats = {
             k: 0
             for k in (
@@ -138,15 +167,38 @@ class _Mutator:
     def _bindings(self) -> tuple[DataFrame, dict]:
         """Compile the read part once; a no-read statement binds one row."""
         if self._df is None:
-            compiler = Compiler(self.graph, self.spark, self.params)
             if self.ctx.plan is None:
-                self._df = self.spark.range(1).select(F.lit(1).alias("__one"))
+                # a literal row is already frozen: no checkpoint job
+                self._df = values_frame(self.spark, [(1,)], "__one int")
+                self._lit = {}
             else:
+                compiler = Compiler(self.graph, self.spark, self.params)
                 self._df, self._scope = compiler.compile_raw(self.ctx.plan)
                 self._scope = dict(self._scope)
-            # freeze the pre-write snapshot (reads see state before writes)
-            self._df = self._df.localCheckpoint(eager=True)
+                # freeze the pre-write snapshot (reads see state before writes)
+                self._df = self._df.localCheckpoint(eager=True)
         return self._df, self._scope
+
+    def _const(self, e: E.Expr):
+        """(True, value) for a literal or bound ``$param``, else (False, None)."""
+        if isinstance(e, E.Lit):
+            return True, e.value
+        if isinstance(e, E.Param) and e.name in self.params:
+            return True, self.params[e.name]
+        return False, None
+
+    def _consts(self, pairs) -> dict | None:
+        """{key: value} when every expression is constant, else None."""
+        out = {}
+        for k, e in pairs:
+            ok, v = self._const(e)
+            if not ok:
+                return None
+            out[k] = v
+        return out
+
+    def _frame(self, rows) -> DataFrame:
+        return rows.frame(self.spark) if isinstance(rows, Rows) else rows
 
     def _expr(self, e: E.Expr, df: DataFrame) -> F.Column:
         compiler = Compiler(self.graph, self.spark, self.params)
@@ -230,34 +282,45 @@ class _Mutator:
                 raise MutationError("CREATE node requires a label")
             label = node.labels[0]
             start = self._next_id()
-            w = Window.orderBy(F.monotonically_increasing_id())
-            base = base.withColumn(
-                _p(var, "id"), F.lit(start - 1) + F.row_number().over(w).cast("long")
+            props = self._consts(node.props) if self._lit is not None else None
+            if props is not None:
+                # no read part: one row, built in Python
+                new_nodes = literal_row(
+                    self.spark, {"id": start, **props}, self.graph.node_frames.get(label)
+                )
+                n_new = 1
+                base = base.withColumn(_p(var, "id"), F.lit(start).cast("long"))
+                self._lit[var] = start
+            else:
+                self._lit = None
+                w = Window.orderBy(F.monotonically_increasing_id())
+                base = base.withColumn(
+                    _p(var, "id"), F.lit(start - 1) + F.row_number().over(w).cast("long")
+                )
+                cols = [F.col(_p(var, "id")).alias("id")]
+                for k, v in node.props:
+                    cols.append(self._expr(v, base).alias(k))
+                new_nodes, n_new = _sized(base.select(*cols))
+            self.graph = self.graph.create_nodes(
+                label, new_nodes, ids_disjoint=len(node.labels) == 1, next_id=start + n_new
             )
-            cols = [F.col(_p(var, "id")).alias("id")]
-            prop_names = []
-            for k, v in node.props:
-                cols.append(self._expr(v, base).alias(k))
-                prop_names.append(k)
-            # lazy checkpoint fused with the count below (r15 pregel.py pattern)
-            new_nodes = base.select(*cols).localCheckpoint(eager=False)
-            self.graph = self.graph.create_nodes(label, new_nodes, ids_disjoint=True)
-            n_new = new_nodes.count()
             self.stats["nodes_created"] += n_new
             # openCypher-style counters: properties written on created
             # nodes count as properties_set
-            self.stats["properties_set"] += n_new * len(prop_names)
+            self.stats["properties_set"] += n_new * len(node.props)
             # multi-label CREATE (n:A:B): the node exists under every label
             # (lpg/node.rs label sets -> one row per label frame here)
             for extra in node.labels[1:]:
-                self.graph = self.graph.merge_nodes(extra, new_nodes, keys=["id"])
+                self.graph = self.graph.create_nodes(
+                    extra, new_nodes, next_id=start + n_new
+                )
                 self.stats["labels_added"] += n_new
             # make the new var usable by later clauses/edges
             self.ctx.bound[var] = ("node", label)
             if self._scope is not None:
                 from grafeo_spark.plans.compiler import VarInfo
 
-                self._scope[var] = VarInfo("node", label, ("id", *prop_names))
+                self._scope[var] = VarInfo("node", label, ("id", *[k for k, _ in node.props]))
             for k, _v in node.props:
                 base = base.withColumn(_p(var, k), self._expr(_v, base))
         # edges
@@ -271,15 +334,24 @@ class _Mutator:
             if rel.direction == "both":
                 raise MutationError("CREATE relationship requires a direction")
             src_var, dst_var = (left.var, right.var) if rel.direction == "out" else (right.var, left.var)
-            cols = [
-                F.col(_p(src_var, "id")).alias("src"),
-                F.col(_p(dst_var, "id")).alias("dst"),
-            ]
-            for k, v in rel.props:
-                cols.append(self._expr(v, base).alias(k))
-            new_edges = base.select(*cols).localCheckpoint(eager=False)
-            self.graph = self.graph.create_edges(rel.types[0], new_edges)
-            n_new = new_edges.count()
+            etype = rel.types[0]
+            props = self._consts(rel.props)
+            if self._lit is not None and src_var in self._lit and dst_var in self._lit and props is not None:
+                new_edges = literal_row(
+                    self.spark,
+                    {"src": self._lit[src_var], "dst": self._lit[dst_var], **props},
+                    self.graph.edge_frames.get(etype),
+                )
+                n_new = 1
+            else:
+                cols = [
+                    F.col(_p(src_var, "id")).alias("src"),
+                    F.col(_p(dst_var, "id")).alias("dst"),
+                ]
+                for k, v in rel.props:
+                    cols.append(self._expr(v, base).alias(k))
+                new_edges, n_new = _sized(base.select(*cols))
+            self.graph = self.graph.create_edges(etype, new_edges)
             self.stats["relationships_created"] += n_new
             self.stats["properties_set"] += n_new * len(rel.props)
             i += 2
@@ -317,14 +389,24 @@ class _Mutator:
                 if clause.on_match:
                     self._apply_set_to_ids(label, frame.select("id"), clause.on_match, node.var)
             else:
-                from grafeo_spark.graph import local_frame
-
-                new_df = local_frame(self.spark, [(self._next_id(),)], "id long")
-                self.graph = self.graph.create_nodes(label, new_df, ids_disjoint=True)
+                start = self._next_id()
+                self.graph = self.graph.create_nodes(
+                    label, Rows(_ID, [(start,)]), ids_disjoint=True, next_id=start + 1
+                )
                 self.stats["nodes_created"] += 1
             if node.var:
                 self.ctx.bound[node.var] = ("node", label)
             return
+
+        if self._lit is not None:
+            want = self._consts(node.props)
+            on_create = self._consts(
+                [(it.key, it.expr) for it in clause.on_create if it.kind == "prop"]
+            )
+            if want is not None and on_create is not None and len(on_create) == len(clause.on_create):
+                self._merge_literal(node, clause, label, frame, want, on_create)
+                return
+        self._lit = None
 
         keys = [k for k, _ in node.props]
         wanted = (
@@ -351,21 +433,21 @@ class _Mutator:
         else:
             missing = wanted
             matched_ids = None
-        missing = missing.localCheckpoint(eager=False)
-        n_missing = missing.count()
+        start = self._next_id()
+        w = Window.orderBy(F.monotonically_increasing_id())
+        new_nodes = missing.withColumn(
+            "id", F.lit(start - 1) + F.row_number().over(w).cast("long")
+        ).select("id", *keys)
+        for it in clause.on_create:
+            if it.kind != "prop":
+                raise MutationError("ON CREATE SET supports property items only")
+            new_nodes = new_nodes.withColumn(it.key, self._expr(it.expr, new_nodes))
+        new_rows, n_missing = _sized(new_nodes)
         if n_missing:
-            start = self._next_id()
-            w = Window.orderBy(F.monotonically_increasing_id())
-            new_nodes = missing.withColumn(
-                "id", F.lit(start - 1) + F.row_number().over(w).cast("long")
-            ).select("id", *keys)
-            for it in clause.on_create:
-                if it.kind != "prop":
-                    raise MutationError("ON CREATE SET supports property items only")
-                new_nodes = new_nodes.withColumn(it.key, self._expr(it.expr, new_nodes))
-                self.stats["properties_set"] += n_missing
-            new_nodes = new_nodes.localCheckpoint(eager=True)
-            self.graph = self.graph.create_nodes(label, new_nodes, ids_disjoint=True)
+            self.stats["properties_set"] += n_missing * len(clause.on_create)
+            self.graph = self.graph.create_nodes(
+                label, new_rows, ids_disjoint=True, next_id=start + n_missing
+            )
             self.stats["nodes_created"] += n_missing
         if matched_ids is not None and clause.on_match:
             # matched_ids projects the already-materialized `hits` — the
@@ -389,6 +471,44 @@ class _Mutator:
             self._df = df2.join(add, cond, "left").drop(
                 *[f"__mg_{k}" for k in keys], *[f"__mk_{k}" for k in keys]
             )
+            from grafeo_spark.plans.compiler import VarInfo
+
+            self._scope[node.var] = VarInfo("node", label, ("id",))
+            self.ctx.bound[node.var] = ("node", label)
+
+    def _merge_literal(
+        self, node: P.NodePat, clause: P.MergeClause, label: str, frame, want: dict, on_create: dict
+    ) -> None:
+        """MERGE with constant properties and no read part: ONE probe job
+        fetches the ids of the matching nodes; a miss creates the node in
+        Python under a fresh id from the mark."""
+        ids: list = []
+        if frame is not None and all(k in frame.columns for k in want):
+            cond = None
+            for k, v in want.items():
+                c = F.col(k) == F.lit(v)
+                cond = c if cond is None else cond & c
+            ids = [r[0] for r in frame.filter(cond).select("id").collect()]
+        if ids:
+            if clause.on_match:
+                self._apply_set_to_ids(label, Rows(_ID, [(i,) for i in ids]), clause.on_match, node.var)
+        else:
+            start = self._next_id()
+            rows = literal_row(self.spark, {"id": start, **want, **on_create}, frame)
+            self.graph = self.graph.create_nodes(label, rows, ids_disjoint=True, next_id=start + 1)
+            self.stats["nodes_created"] += 1
+            self.stats["properties_set"] += len(on_create)
+            ids = [start]
+        if node.var:
+            idc = _p(node.var, "id")
+            if len(ids) == 1:
+                self._df = self._df.withColumn(idc, F.lit(ids[0]).cast("long"))
+                self._lit[node.var] = ids[0]
+            else:
+                self._df = self._df.crossJoin(
+                    values_frame(self.spark, [(i,) for i in ids], f"`{idc}` long")
+                )
+                self._lit = None
             from grafeo_spark.plans.compiler import VarInfo
 
             self._scope[node.var] = VarInfo("node", label, ("id",))
@@ -424,9 +544,9 @@ class _Mutator:
             missing = pairs.join(F.broadcast(hits_e), ["src", "dst"], "left_anti")
         else:
             missing = pairs
-        missing = missing.localCheckpoint(eager=False)
-        n = missing.count()
+        missing, n = _sized(missing)
         if n:
+            created = self._frame(missing)
             # ON CREATE SET r.k = v applies to the rows being created
             # (merge.rs ON CREATE semantics, same as _merge_node's arm)
             for it in clause.on_create:
@@ -436,9 +556,9 @@ class _Mutator:
                     raise MutationError(
                         f"ON CREATE SET target {it.var!r} is not the merged relationship"
                     )
-                missing = missing.withColumn(it.key, self._expr(it.expr, missing))
+                created = created.withColumn(it.key, self._expr(it.expr, created))
                 self.stats["properties_set"] += n
-            self.graph = self.graph.create_edges(etype, missing)
+            self.graph = self.graph.create_edges(etype, created)
             self.stats["relationships_created"] += n
         if existing is not None and clause.on_match:
             # Keys only: `pairs` may carry inline rel-prop columns (from
@@ -477,32 +597,44 @@ class _Mutator:
             if info is None:
                 raise MutationError(f"DELETE of unbound variable {var!r}")
             if info.kind == "node":
-                ids = df.select(F.col(_p(var, "id")).alias("id")).distinct().localCheckpoint(eager=False)
-                n = ids.count()
+                ids, n = _sized(df.select(F.col(_p(var, "id")).cast("long").alias("id")).distinct())
                 labels = [info.label] if info.label else list(self.graph.node_frames)
                 for lbl in labels:
                     if lbl in self.graph.node_frames:
                         self.graph = self.graph.delete_nodes(lbl, ids, detach=clause.detach)
                 self.stats["nodes_deleted"] += n
             elif info.kind == "edge":
-                pairs = (
+                pairs, _n = _sized(
                     df.select(
                         F.col(_p(var, "src")).alias("src"),
                         F.col(_p(var, "dst")).alias("dst"),
-                    )
-                    .distinct()
-                    .localCheckpoint(eager=True)
+                    ).distinct()
                 )
+                keys = self._frame(pairs)
                 etypes = [info.label] if info.label else list(self.graph.edge_frames)
                 for t in etypes:
                     e = self.graph.edge_frames[t]
-                    kept = e.join(pairs, ["src", "dst"], "left_anti")
-                    self.stats["relationships_deleted"] += e.count() - kept.count()
-                    self.graph = self.graph.with_edges(t, kept)
+                    # one scan counts the removed rows (parallel edges too)
+                    self.stats["relationships_deleted"] += e.join(
+                        keys, ["src", "dst"], "left_semi"
+                    ).count()
+                    self.graph = self.graph.delete_edges(t, pairs)
             else:
                 raise MutationError(f"cannot DELETE value variable {var!r}")
 
     # -- SET / REMOVE ----------------------------------------------------
+
+    def _patch(self, labels: list[str], upd: DataFrame, values) -> None:
+        """Apply one patch per label: ``upd`` is a materialized frame with
+        ``id``; ``values(frame)`` gives, for that label's frame, the
+        (property, value Column, written-flag Column) triples."""
+        for lbl in labels:
+            frame = self.graph.node_frames[lbl]
+            cols = [F.col("id")]
+            for k, val, flag in values(frame):
+                cols += [val.alias(k), flag.alias(set_flag(k))]
+            if len(cols) > 1:
+                self.graph = self.graph.patch_nodes(lbl, upd.select(*cols))
 
     def set_items(self, items: list[P.SetItem]) -> None:
         df, scope = self._bindings()
@@ -520,7 +652,7 @@ class _Mutator:
                     rows = rows.localCheckpoint(eager=False)
                     cnt = rows.count()
                     if cnt:
-                        self.graph = self.graph.merge_nodes(it.key, rows, keys=["id"])
+                        self.graph = self.graph.merge_nodes(it.key, rows, keys=["id"], same_ids=True)
                         self.stats["labels_added"] += cnt
             elif it.kind in ("merge_props", "all_props"):
                 # SET n += {..} (MergeProperties, ast.rs:323) and
@@ -546,7 +678,7 @@ class _Mutator:
                 # the constant __hit agg keeps groupBy().agg() legal for the
                 # degenerate empty map (SET n += {} is a no-op; SET n = {}
                 # still nulls the other columns)
-                upd = (
+                upd, n = _sized(
                     df.select(
                         F.col(_p(it.var, "id")).alias("id"),
                         *[self._expr(v, df).alias(f"__new_{k}") for k, v in entries],
@@ -556,67 +688,50 @@ class _Mutator:
                         F.max(F.lit(True)).alias("__hit"),
                         *[F.max(f"__new_{k}").alias(f"__new_{k}") for k in keys],
                     )
-                    .localCheckpoint(eager=True)
                 )
-                self.stats["properties_set"] += upd.count() * len(keys)
-                for lbl in labels:
-                    frame = self.graph.node_frames[lbl]
-                    joined = frame.join(upd, "id", "left")
-                    if it.kind == "all_props":
+                upd = self._frame(upd)
+                self.stats["properties_set"] += n * len(keys)
+                replace_all = it.kind == "all_props"
+
+                def values(frame, keys=keys, upd=upd, replace_all=replace_all):
+                    out = []
+                    for k in keys:
+                        new = F.col(f"__new_{k}")
+                        # a null map value keeps the old value under +=
+                        # (the engine's SET-null convention, see 'prop')
+                        out.append((k, new, F.lit(True) if replace_all else new.isNotNull()))
+                    if replace_all:
                         # the replace form also WRITES (nulls) every other
                         # property column on matched rows — openCypher-style
                         # counters include those removals in properties_set
                         nulled = [
-                            c
-                            for c in frame.columns
-                            if c != "id" and not c.startswith("_") and c not in keys
+                            f
+                            for f in frame.schema.fields
+                            if f.name != "id" and not f.name.startswith("_") and f.name not in keys
                         ]
                         if nulled:
                             matched = frame.join(upd, "id", "left_semi").count()
                             self.stats["properties_set"] += matched * len(nulled)
-                        for c in frame.columns:
-                            if c == "id" or c.startswith("_") or c in keys:
-                                continue
-                            joined = joined.withColumn(
-                                c,
-                                F.when(F.col("__hit"), F.lit(None)).otherwise(F.col(c)),
-                            )
-                    for k in keys:
-                        new = F.col(f"__new_{k}")
-                        if it.kind == "merge_props":
-                            # null map values keep the old value — the
-                            # engine's SET-null convention (see 'prop')
-                            col = F.coalesce(new, F.col(k)) if k in frame.columns else new
-                        else:
-                            col = (
-                                F.when(F.col("__hit"), new).otherwise(F.col(k))
-                                if k in frame.columns
-                                else F.when(F.col("__hit"), new)
-                            )
-                        joined = joined.withColumn(k, col)
-                    joined = joined.drop("__hit", *[f"__new_{k}" for k in keys])
-                    self.graph = self.graph.with_nodes(lbl, joined, ids_disjoint=True)
+                        out += [(f.name, F.lit(None).cast(f.dataType), F.lit(True)) for f in nulled]
+                    return out
+
+                self._patch(labels, upd, values)
             else:
-                upd = (
+                upd, n = _sized(
                     df.select(
                         F.col(_p(it.var, "id")).alias("id"),
                         self._expr(it.expr, df).alias("__new"),
                     )
                     .groupBy("id")
                     .agg(F.max("__new").alias("__new"))
-                    .localCheckpoint(eager=True)
                 )
-                self.stats["properties_set"] += upd.count()
-                for lbl in labels:
-                    frame = self.graph.node_frames[lbl]
-                    joined = frame.join(upd, "id", "left")
-                    if it.key in frame.columns:
-                        joined = joined.withColumn(
-                            it.key, F.coalesce(F.col("__new"), F.col(it.key))
-                        )
-                    else:
-                        joined = joined.withColumn(it.key, F.col("__new"))
-                    self.graph = self.graph.with_nodes(lbl, joined.drop("__new"), ids_disjoint=True)
+                self.stats["properties_set"] += n
+                new = F.col("__new")
+                # SET n.k = null keeps the old value (the engine's SET-null
+                # convention): only non-null values are written
+                self._patch(
+                    labels, self._frame(upd), lambda frame, k=it.key: [(k, new, new.isNotNull())]
+                )
 
     def remove_items(self, items: list[P.SetItem]) -> None:
         df, scope = self._bindings()
@@ -624,46 +739,69 @@ class _Mutator:
             info = scope.get(it.var) if scope else None
             if info is None or info.kind != "node":
                 raise MutationError(f"REMOVE target {it.var!r} must be a bound node")
-            ids = df.select(F.col(_p(it.var, "id")).alias("id")).distinct()
+            ids, _n = _sized(df.select(F.col(_p(it.var, "id")).cast("long").alias("id")).distinct())
             if it.kind == "label":
                 # RemoveLabelOperator (mutation.rs:660): drop rows from the
                 # label frame (nodes keep existing under other labels)
                 if it.key in self.graph.node_frames:
                     frame = self.graph.node_frames[it.key]
-                    kept = frame.join(ids, "id", "left_anti")
-                    self.stats["labels_removed"] += frame.count() - kept.count()
-                    self.graph = self.graph.with_nodes(it.key, kept, ids_disjoint=True)
+                    self.stats["labels_removed"] += frame.join(
+                        self._frame(ids), "id", "left_semi"
+                    ).count()
+                    self.graph = self.graph.delete_nodes(it.key, ids, detach=False)
             else:
                 labels = [info.label] if info.label else list(self.graph.node_frames)
-                for lbl in labels:
-                    frame = self.graph.node_frames[lbl]
-                    if it.key not in frame.columns:
-                        continue
-                    flagged = frame.join(ids.withColumn("__rm", F.lit(True)), "id", "left")
-                    self.graph = self.graph.with_nodes(
-                        lbl,
-                        flagged.withColumn(
-                            it.key,
-                            F.when(F.col("__rm"), F.lit(None)).otherwise(F.col(it.key)),
-                        ).drop("__rm"),
-                        ids_disjoint=True,
-                    )
+
+                def values(frame, k=it.key):
+                    if k not in frame.columns:
+                        return []
+                    return [(k, F.lit(None).cast(frame.schema[k].dataType), F.lit(True))]
+
+                self._patch(labels, self._frame(ids), values)
                 self.stats["properties_set"] += 1
 
-    def _apply_set_to_ids(self, label: str, ids: DataFrame, items: list[P.SetItem], var) -> None:
+    def _apply_set_to_ids(self, label: str, ids, items: list[P.SetItem], var) -> None:
+        """ON MATCH / ON CREATE SET of constant-valued items on ``ids`` (a
+        frame or Rows of ``id``)."""
+        ids = self._frame(ids)
         for it in items:
             if it.kind != "prop":
                 raise MutationError("ON MATCH/CREATE SET supports property items only")
-            if isinstance(it.expr, E.Lit):
-                # literal SET value: no Spark job to evaluate a constant
-                val = it.expr.value
-            else:
+            ok, val = self._const(it.expr)
+            if not ok:
                 val = self.spark.range(1).select(self._expr(it.expr, self.spark.range(1))).collect()[0][0]
             frame = self.graph.node_frames[label]
-            flagged = frame.join(F.broadcast(ids.withColumn("__hit", F.lit(True))), "id", "left")
-            if it.key in frame.columns:
-                newcol = F.when(F.col("__hit"), F.lit(val)).otherwise(F.col(it.key))
-            else:
-                newcol = F.when(F.col("__hit"), F.lit(val))
-            self.graph = self.graph.with_nodes(label, flagged.withColumn(it.key, newcol).drop("__hit"), ids_disjoint=True)
+            self.graph = self.graph.patch_nodes(
+                label,
+                ids.select(
+                    "id", _typed_lit(val, frame, it.key).alias(it.key), F.lit(True).alias(set_flag(it.key))
+                ),
+            )
             self.stats["properties_set"] += 1
+
+
+def _sized(df: DataFrame) -> tuple["Rows | DataFrame", int]:
+    """The frame's rows and their count: held in Python when few (one
+    job), else checkpointed (one job) and counted (one more)."""
+    rows = Rows.of(df)
+    if rows is not None:
+        return rows, len(rows)
+    df = df.localCheckpoint(eager=True)
+    return df, df.count()
+
+
+def _typed_lit(val, frame: DataFrame, key: str):
+    """A literal for property ``key``: a null or a number takes the
+    column's type when the frame has it (so patches merge without
+    widening), else ``createDataFrame``'s inferred type."""
+    from pyspark.sql.types import NumericType
+
+    from grafeo_spark.graph import infer_type
+
+    t = infer_type(val)
+    have = frame.schema[key].dataType if key in frame.columns else None
+    if val is None:
+        return F.lit(None).cast(have or "string")
+    if have is not None and isinstance(have, NumericType) and isinstance(t, NumericType):
+        return F.lit(val).cast(have)
+    return F.lit(val).cast(t) if t is not None else F.lit(val)

@@ -651,10 +651,6 @@ def _compile_field(graph: PropertyGraph, root: Field) -> DataFrame:
 # --------------------------------------------------------------------- #
 
 
-def _next_id(graph: PropertyGraph) -> int:
-    return graph.next_node_id()
-
-
 def _mutation_parts(name: str) -> tuple[str, str]:
     for kind in ("create", "update", "delete"):
         if name.startswith(kind) and len(name) > len(kind):
@@ -686,12 +682,11 @@ def _execute_mutation(db, root: Field) -> DataFrame:
                 "create mutation: id is engine-assigned (a caller-supplied id "
                 "could collide across labels and break pruning invariants)"
             )
-        nid = _next_id(graph)
-        from grafeo_spark.graph import local_row
+        nid = graph.next_node_id()
+        from grafeo_spark.graph import literal_row
 
-        row = {"id": nid, **dict(root.args)}
-        df = local_row(spark, row)
-        db.graph = graph.create_nodes(label, df, ids_disjoint=True)
+        df = literal_row(spark, {"id": nid, **dict(root.args)}, graph.node_frames.get(label))
+        db.graph = graph.create_nodes(label, df, ids_disjoint=True, next_id=nid + 1)
         return df.select(*(scalars or ["id"]))
 
     if label not in graph.node_frames:
@@ -715,7 +710,7 @@ def _execute_mutation(db, root: Field) -> DataFrame:
         for k, v in args.items():
             old = F.col(k) if k in frame.columns else F.lit(None)
             updated = updated.withColumn(k, F.when(cond, F.lit(v)).otherwise(old))
-        db.graph = graph.with_nodes(label, updated, ids_disjoint=True)
+        db.graph = graph.with_nodes(label, updated, ids_disjoint=True, same_ids=True)
         return db.graph.node_frames[label].filter(cond).select(*(scalars or ["id"]))
 
     # delete (detach): anti-join via delete_nodes

@@ -1806,6 +1806,7 @@ class Traversal:
                         key, F.when(F.col("__hit"), F.lit(value)).otherwise(old)
                     ).drop("__hit"),
                     ids_disjoint=True,
+                    same_ids=True,
                 )
             self.g._rebind(g2)
             return self
@@ -1858,9 +1859,7 @@ class Traversal:
             g2 = self.g.graph
             for t in types:
                 keys = pairs.filter(F.col("_t") == t).select("src", "dst")
-                g2 = g2.with_edges(
-                    t, g2.edge_frames[t].join(keys, ["src", "dst"], "left_anti")
-                )
+                g2 = g2.delete_edges(t, keys)
             self.g._rebind(g2)
         else:
             raise GremlinError("drop() applies to node or edge traversals")
@@ -2054,17 +2053,16 @@ class _AddV:
         return self
 
     def iterate(self) -> "_AddV":
-        frames = list(self.g.graph.node_frames.values()) or list(
-            self.g.graph.edge_frames.values()
-        )
-        spark = frames[0].sparkSession
-        nid = _next_node_id(self.g.graph)
-        from grafeo_spark.graph import local_row
+        graph = self.g.graph
+        nid = graph.next_node_id()
+        from grafeo_spark.graph import literal_row
 
-        row = {"id": nid, **dict(self.props)}
-        df = local_row(spark, row)
-        self.g._rebind(self.g.graph.create_nodes(self.label, df, ids_disjoint=True))
-        self._created = df
+        self._created = literal_row(
+            graph._spark(), {"id": nid, **dict(self.props)}, graph.node_frames.get(self.label)
+        )
+        self.g._rebind(
+            graph.create_nodes(self.label, self._created, ids_disjoint=True, next_id=nid + 1)
+        )
         return self
 
     def toDF(self) -> DataFrame:
@@ -2129,10 +2127,6 @@ class _AddE:
 
     def toList(self) -> list:
         return [tuple(r) for r in self.toDF().collect()]
-
-
-def _next_node_id(graph: PropertyGraph) -> int:
-    return graph.next_node_id()
 
 
 _SACK_OPS = {

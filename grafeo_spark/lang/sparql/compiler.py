@@ -19,7 +19,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from grafeo_spark.graph import TripleStore
+from grafeo_spark.graph import DELTA_BROADCAST_MAX, TripleStore
 from grafeo_spark.lang.sparql import parser as P
 
 
@@ -1410,35 +1410,23 @@ def _template_rows(
     return out.distinct()
 
 
-# Delta frames (delete/insert sets) are broadcast into their anti-joins
-# when they fit — the store side is then scanned, never shuffled. Above
-# the cap (a mass rewrite) the join falls back to the planner's choice.
-_DELTA_BROADCAST_MAX = 1_000_000
-
-
-def _minus_rows(store: DataFrame, rows: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """Anti-join the store against instantiated rows, matching the object by
-    bound value (o_iri or o_lit) so variable bindings erase either kind.
-    Rows carrying a graph (DELETE DATA { GRAPH <g> { ... } }) match only
-    that graph; graph-less rows match across graphs (this store exposes a
-    union-default-graph view to plain patterns). ``n_rows``, when known
-    (a materialized delete set), gates a broadcast hint so the store is
-    never shuffled for a small delete."""
-    r = rows.select(
-        F.col("s").alias("_ds"),
-        F.col("p").alias("_dp"),
-        F.coalesce("o_iri", "o_lit").alias("_dv"),
-        F.col("g").alias("_dg"),
-    ).distinct()
-    if n_rows is not None and n_rows <= _DELTA_BROADCAST_MAX:
-        r = F.broadcast(r)
-    cond = (
-        (F.col("s") == F.col("_ds"))
-        & (F.col("p") == F.col("_dp"))
-        & (F.coalesce("o_iri", "o_lit") == F.col("_dv"))
-        & (F.col("_dg").isNull() | F.col("g").eqNullSafe(F.col("_dg")))
-    )
-    return store.join(r, cond, "left_anti")
+def _ground_rows(triples) -> list[tuple] | None:
+    """Store rows of a ground data block (INSERT/DELETE DATA) built in
+    Python, so the update runs no job; None when a blank node needs
+    minting."""
+    out = []
+    for entry in triples:
+        tp, g_val = (entry.tp, entry.g) if isinstance(entry, P.GraphedTriple) else (entry, None)
+        if not (isinstance(tp.s, P.Iri) and isinstance(tp.p, P.Iri)):
+            return None
+        if isinstance(tp.o, P.Iri):
+            o = (tp.o.value, None, None)
+        elif isinstance(tp.o, P.Lit):
+            o = (None, str(tp.o.value), tp.o.datatype)
+        else:
+            return None
+        out.append((tp.s.value, tp.p.value, *o, g_val))
+    return out
 
 
 def compile_update(ts: TripleStore, u: P.UpdateQuery) -> TripleStore:
@@ -1515,15 +1503,16 @@ def compile_update(ts: TripleStore, u: P.UpdateQuery) -> TripleStore:
         # store once (the base filter) — same linear-chain discipline as
         # the modify path above
         return TripleStore(base.unionByName(src_rows.localCheckpoint(eager=False)))
-    if u.kind == "insert_data":
-        return ts.insert(_template_rows(spark, u.data, None))
-    if u.kind == "delete_data":
-        return TripleStore(_minus_rows(ts.df, _template_rows(spark, u.data, None)))
+    if u.kind in ("insert_data", "delete_data"):
+        rows = _ground_rows(u.data)
+        if rows is None:
+            rows = _template_rows(spark, u.data, None)
+        return ts.insert(rows) if u.kind == "insert_data" else ts.delete(rows)
     if u.kind == "modify":
         # The delete and insert sets are materialized eagerly (they are
-        # delta-sized: the WHERE solutions instantiated into a template),
-        # so the returned store's plan references the input store exactly
-        # ONCE (the anti-join left side). Without this, each update layer
+        # delta-sized: the WHERE solutions instantiated into a template)
+        # and merge into the store's one write delta, so the returned
+        # store's plan keeps its shape. Without this, each update layer
         # re-expanded the store subtree through its bindings AND its anti
         # side — 2^k growth over k chained updates — which forced a full
         # store re-materialization per update (engine.sparql_update pre-
@@ -1538,7 +1527,7 @@ def compile_update(ts: TripleStore, u: P.UpdateQuery) -> TripleStore:
             bindings = bindings.localCheckpoint(eager=False)
         out = ts.df
         dels = ins = None
-        n_dels = n_ins = None
+        n_ins = None
         if u.delete_tpl:
             dels = _template_rows(spark, u.delete_tpl, bindings)
             if bindings is not None:
@@ -1557,16 +1546,13 @@ def compile_update(ts: TripleStore, u: P.UpdateQuery) -> TripleStore:
                 ins.select(F.lit(1).alias("_k"))
             )
             cnt = {r["_k"]: r["count"] for r in tagged.groupBy("_k").count().collect()}
-            n_dels, n_ins = cnt.get(0, 0), cnt.get(1, 0)
-        elif bindings is not None and dels is not None:
-            n_dels = dels.count()
+            n_ins = cnt.get(1, 0)
         elif bindings is not None and ins is not None:
             n_ins = ins.count()
-        if dels is not None:
-            out = _minus_rows(out, dels, n_dels)
-        new = TripleStore(out)
+        new = ts if dels is None else ts.delete(dels)
+        out = new.df
         if ins is not None:
-            if n_ins is not None and n_ins <= _DELTA_BROADCAST_MAX:
+            if n_ins is not None and n_ins <= DELTA_BROADCAST_MAX:
                 # set semantics: only triples not already present. The
                 # presence probe SEMI-joins the store against the broadcast
                 # inserted keys (one scan, no store shuffle) and the anti-

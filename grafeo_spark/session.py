@@ -14,13 +14,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores this process may run on (its CPU affinity, which honours
+    cgroup/taskset pinning), not the host's core count."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except (AttributeError, OSError):
+        return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """16g, capped at three quarters of physical RAM so a default session
+    never asks for more heap than the host has."""
+    try:
+        ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{max(1, min(16, int(ram_gb * 0.75)))}g"
+
+
 def get_spark(
     app_name: str = "grafeo-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
@@ -63,7 +82,10 @@ def get_spark(
         # reader rejects; read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Local testing headroom; a cluster submit overrides these.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # ContextCleaner only unpersists dead checkpoint/broadcast blocks

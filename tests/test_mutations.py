@@ -440,3 +440,99 @@ def test_merge_edge_inline_props_with_on_match(wdb):
     # and a second unrelated MATCH over the edge type also works
     total = rows(wdb.cypher("MATCH ()-[r:KNOWS]->() RETURN count(*) AS c"))
     assert total == [(len(KNOWS),)]
+
+
+# --------------------------------------------------------------------- #
+# write cost: the carried id mark, job-free literal writes, one delta
+# per frame
+# --------------------------------------------------------------------- #
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` launched, its result), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "write-jobs-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _plan_nodes(df) -> int:
+    tree = df._jdf.queryExecution().analyzed().numberedTreeString()
+    return sum(1 for line in tree.splitlines() if line[:1].isdigit())
+
+
+def test_literal_writes_run_no_jobs_once_the_id_mark_is_known(wdb, spark):
+    wdb.graph.next_node_id()  # the one scan a graph lineage pays
+    n, _ = _jobs(spark, lambda: wdb.cypher("CREATE (t:Tag {name: $n})", {"n": "a"}))
+    assert n == 0
+    n, _ = _jobs(spark, lambda: wdb.gremlin("g.addV('Tag').property('name', 'b')"))
+    assert n == 0
+    for name in ("a", "c"):  # a hit, then a miss
+        n, _ = _jobs(spark, lambda: wdb.cypher("MERGE (t:Tag {name: $n})", {"n": name}))
+        assert n <= 1
+    n, _ = _jobs(spark, lambda: wdb.cypher("MERGE (p:Person {name: 'Alice'})"))
+    assert n <= 1
+    assert rows(wdb.cypher("MATCH (t:Tag) RETURN t.name AS n")) == [("a",), ("b",), ("c",)]
+    assert rows(wdb.cypher("MATCH (p:Person) RETURN count(*) AS n")) == [(8,)]
+
+
+def test_point_read_plan_keeps_its_size_after_many_writes(wdb):
+    point = "MATCH (p:Person) WHERE p.name = 'Alice' RETURN p.age AS age"
+    wdb.cypher("CREATE (p:Person {name: 'w0', age: 0})")
+    after_one = _plan_nodes(wdb.cypher(point))
+    alive = {"w0"}
+    for i in range(1, 20):
+        if i % 4 == 0:
+            wdb.cypher("CREATE (p:Person {name: $n, age: $i})", {"n": f"w{i}", "i": i})
+            alive.add(f"w{i}")
+        elif i % 4 == 1:
+            wdb.cypher("MERGE (p:Person {name: $n})", {"n": f"m{i}"})
+            alive.add(f"m{i}")
+        elif i % 4 == 2:
+            wdb.cypher(
+                "MATCH (p:Person) WHERE p.name = 'Alice' SET p.age = $i", {"i": i}
+            )
+        else:
+            wdb.cypher(
+                "MATCH (p:Person) WHERE p.name = $n DETACH DELETE p", {"n": f"w{i - 3}"}
+            )
+            alive.discard(f"w{i - 3}")
+    assert _plan_nodes(wdb.cypher(point)) == after_one
+    assert rows(wdb.cypher(point)) == [(18,)]
+    names = {r[0] for r in wdb.cypher("MATCH (p:Person) RETURN p.name AS n").collect()}
+    assert names == {p[1] for p in PEOPLE} | alive
+
+
+def test_ids_stay_unique_across_paths_rollback_and_delete(wdb):
+    wdb.cypher("CREATE (t:Tag {name: 'c1'})")
+    wdb.cypher("MERGE (t:Tag {name: 'm1'})")
+    wdb.gremlin("g.addV('Tag').property('name', 'g1')")
+    wdb.graphql('mutation { createTag(name: "q1") { id } }')
+    wdb.create_node("Tag", {"name": "d1"})
+    tx = wdb.begin_transaction()
+    tx.cypher("CREATE (t:Tag {name: 'tx'})")
+    tx.rollback()
+    wdb.cypher("CREATE (t:Tag {name: 'c2'})")
+
+    def ids():
+        return {
+            r[0]: r[1]
+            for r in wdb.cypher("MATCH (t:Tag) RETURN t.name AS n, id(t) AS i").collect()
+        }
+
+    tags = ids()
+    assert set(tags) == {"c1", "m1", "g1", "q1", "d1", "c2"}
+    assert len(set(tags.values())) == len(tags)
+    assert not set(tags.values()) & {p[0] for p in PEOPLE}
+    top = max(tags.values())
+    wdb.cypher("MATCH (t:Tag) WHERE id(t) = $i DETACH DELETE t", {"i": top})
+    wdb.cypher("CREATE (t:Tag {name: 'c3'})")
+    after = ids()
+    assert top not in after.values() and after["c3"] > top
